@@ -546,8 +546,8 @@ object Queries {
   def qCellIndexHex(spark: SparkSession, sfDir: String): DataFrame = {
     val px = Synth.pixels(spark, modis).filter((col("row") * 200 + col("col")) % 7 === 0)
     val (lon, lat) = WarpOps.inverseColumns(Crs.MODIS_SINU, col("x"), col("y"))
-    graft.core.Hex.withCellId(px, lon, lat, hexRes, "cell_id")
-      .select("row", "col", "cell_id")
+    px.select(col("row"), col("col"),
+        graft.functions.HexCellId.column(lon, lat, hexRes).as("cell_id"))
       .orderBy("row", "col")
   }
 

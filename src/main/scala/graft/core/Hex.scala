@@ -1,8 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** H3-style hexagonal cell index (the north_rule's "H3 (res 7-12)" family;
   * reference analog: the cell covers rioxarray users build for spatial
   * joins).
@@ -10,8 +7,8 @@ import org.apache.spark.sql.functions._
   * A from-scratch aperture-7 hex DGGS, simplified to a planar lon/lat
   * projection (production would project per cube face like the S2 family in
   * [[Cells]]; the planar form keeps every arithmetic step expressible in
-  * lockstep across scalar / Catalyst Column / DuckDB SQL — same discipline
-  * as the quadtree and S2 indices):
+  * lockstep across the scalar kernels and DuckDB SQL — same discipline as
+  * the quadtree and S2 indices):
   *
   *  - resolution r has pointy-top hexes of circumradius R0/sqrt(7)^r
   *    rotated by r*atan(sqrt(3)/5) — the aperture-7 geometry that gives H3
@@ -27,8 +24,11 @@ import org.apache.spark.sql.functions._
   *    6-neighbour adjacency that makes hex rings the natural kNN probe
   *    shape.
   *
-  * All hot-path forms (Column, SQL) are built from codegen'd builtins only;
-  * rotation constants are per-resolution literals computed once driver-side. */
+  * The Spark forms are one static call per row into this scalar code
+  * ([[graft.functions.HexCellId]] for cell ids,
+  * [[graft.functions.HexRectCover]] for bbox covers); the DuckDB forms
+  * ([[cellIdSql]], DocOps.geomCellCoverHexSql) restate the same arithmetic
+  * with the same per-resolution literals and op order. */
 object Hex {
 
   val MaxRes = 15
@@ -116,86 +116,7 @@ object Hex {
     (math.abs(dq) + math.abs(dr) + math.abs(dq + dr)) / 2
   }
 
-  // ---- Catalyst columns (codegen builtins only) --------------------------
-
-  private def roundHalfUp(c: Column): Column = floor(c + 0.5d)
-
-  def cellIdColumn(lon: Column, lat: Column, resN: Int): Column = {
-    val co = lit(cosT(resN)); val si = lit(sinT(resN))
-    val x = co * lon + si * lat
-    val y = (-si) * lon + co * lat
-    val sz = size(resN)
-    val qf = (lit(Sq3 / 3.0) * x - lit(1.0 / 3.0) * y) / sz
-    val rf = (lit(2.0 / 3.0) * y) / sz
-    val xf = qf; val zf = rf; val yf = -xf - zf
-    val rx = roundHalfUp(xf); val ry = roundHalfUp(yf); val rz = roundHalfUp(zf)
-    val dx = abs(rx - xf); val dy = abs(ry - yf); val dz = abs(rz - zf)
-    val qq = when(dx > dy && dx > dz, -ry - rz).otherwise(rx).cast("long")
-    val rr = when(!(dx > dy && dx > dz) && !(dy > dz), -rx - ry)
-      .otherwise(rz).cast("long")
-    // rr must see the same branch priority as the scalar: z only adjusts
-    // when neither x nor y won
-    shiftleft(shiftleft(qq + Bias, 29).bitwiseOR(rr + Bias), 5)
-      .bitwiseOR(lit(resN.toLong))
-  }
-
-  /** DataFrame-staged hex cell id — identical arithmetic to
-    * [[cellIdColumn]] with every sub-expression computed once through
-    * chained Projects (the Cells.withS2CellId pattern: the single-Column
-    * form re-inlines the qf/rf trees into each cube-round branch, and the
-    * resulting ~2 MB task binary is re-deserialized per task of the
-    * consuming stage). Bit-identical per row; only expression sharing
-    * differs. */
-  def withCellId(df: org.apache.spark.sql.DataFrame, lon: Column, lat: Column,
-                 resN: Int, out: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val keep = df.columns.toSeq
-    val staging = Set("_qf", "_rf", "_yf", "_rx", "_ry", "_rz",
-      "_dx", "_dy", "_dz", "_qq", "_rr", out)
-    require(!keep.exists(staging.contains),
-      s"withCellId staging/output column collision: ${keep.filter(staging.contains).mkString(",")}")
-    def cols(ns: Seq[String]): Seq[Column] = ns.map(col)
-    val co = lit(cosT(resN)); val si = lit(sinT(resN))
-    val x = co * lon + si * lat
-    val y = (-si) * lon + co * lat
-    val sz = size(resN)
-    val s0 = df.select(cols(keep) ++ Seq(
-      ((lit(Sq3 / 3.0) * x - lit(1.0 / 3.0) * y) / sz).as("_qf"),
-      ((lit(2.0 / 3.0) * y) / sz).as("_rf")): _*)
-    // _yf staged with the cellIdColumn's exact op order (-xf - zf), so the
-    // fp value feeding the round and the d-comparisons is bit-identical
-    val s1 = s0.select(cols(keep ++ Seq("_qf", "_rf")) :+
-      (-col("_qf") - col("_rf")).as("_yf"): _*)
-    val xf = col("_qf"); val zf = col("_rf"); val yf = col("_yf")
-    val s2 = s1.select(cols(keep ++ Seq("_qf", "_rf", "_yf")) ++ Seq(
-      roundHalfUp(xf).as("_rx"), roundHalfUp(yf).as("_ry"),
-      roundHalfUp(zf).as("_rz")): _*)
-    val dx = abs(col("_rx") - xf); val dy = abs(col("_ry") - yf)
-    val dz = abs(col("_rz") - zf)
-    val s3 = s2.select(cols(keep ++ Seq("_rx", "_ry", "_rz")) ++ Seq(
-      dx.as("_dx"), dy.as("_dy"), dz.as("_dz")): _*)
-    val qq = when(col("_dx") > col("_dy") && col("_dx") > col("_dz"),
-      -col("_ry") - col("_rz")).otherwise(col("_rx")).cast("long")
-    val rr = when(!(col("_dx") > col("_dy") && col("_dx") > col("_dz")) &&
-        !(col("_dy") > col("_dz")), -col("_rx") - col("_ry"))
-      .otherwise(col("_rz")).cast("long")
-    val s4 = s3.select(cols(keep) ++ Seq(qq.as("_qq"), rr.as("_rr")): _*)
-    val id = shiftleft(shiftleft(col("_qq") + Bias, 29).bitwiseOR(col("_rr") + Bias), 5)
-      .bitwiseOR(lit(resN.toLong))
-    s4.select(cols(keep) :+ id.as(out): _*)
-  }
-
   // ---- hex-vs-rect cover support (SAT) -----------------------------------
-
-  /** Axial float coords (pre-rounding) as Columns — the candidate-range
-    * head of the cover enumeration. */
-  def axialFloatColumns(lon: Column, lat: Column, resN: Int): (Column, Column) = {
-    val co = lit(cosT(resN)); val si = lit(sinT(resN))
-    val x = co * lon + si * lat
-    val y = (-si) * lon + co * lat
-    val sz = size(resN)
-    ((lit(Sq3 / 3.0) * x - lit(1.0 / 3.0) * y) / sz, (lit(2.0 / 3.0) * y) / sz)
-  }
 
   /** Hexagon support radius along the world x / y axes (max |vertex
     * component| in the rotated frame) — per-res constants for the SAT
@@ -210,7 +131,7 @@ object Hex {
   def normalAngles(resN: Int): Seq[Double] =
     Seq(0.0, 60.0, 120.0).map(a => math.toRadians(a) + resN * Alpha)
 
-  /** DuckDB mirror of [[cellIdColumn]] as a CTE chain over `srcSql` (same
+  /** DuckDB mirror of [[cellId]] as a CTE chain over `srcSql` (same
     * literals via Double.toString, same op order, same half-up floor). */
   def cellIdSql(srcSql: String, lonE: String, latE: String, resN: Int,
                 outCols: Seq[String]): String = {

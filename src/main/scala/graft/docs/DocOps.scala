@@ -222,6 +222,48 @@ object DocOps {
       greatest(corners.map(_._2): _*).as("lat_max"))
   }
 
+  /** The sinusoidal inverse as DuckDB text: planar (x, y) expressions ->
+    * (lon, lat), the same op order as WarpOps.inverseColumns. */
+  private def inverseSql(grid: GridRef)(xE: String, yE: String): (String, String) = {
+    val (r, lon0) = grid.crs.proj match {
+      case Sinusoidal(rr, l0) => (rr, l0)
+      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
+    }
+    val lat = s"(($yE) / $r) / ${WarpOps.D2R}"
+    val lon = s"(($xE) / ($r * COS(($yE) / $r))) / ${WarpOps.D2R} + $lon0"
+    (lon, lat)
+  }
+
+  /** DuckDB mirror of [[geomBbox]] over a `doc_id` column: the
+    * (lon_min, lon_max, lat_min, lat_max) expressions every cover mirror
+    * starts from. */
+  private def geomBboxSql(grid: GridRef): (String, String, String, String) = {
+    val t = grid.transform
+    val c0 = s"CAST((doc_id * 7) % 180 AS DOUBLE)"
+    val r0 = s"CAST((doc_id * 13) % 180 AS DOUBLE)"
+    val c1 = s"($c0 + 12)"; val r1 = s"($r0 + 12)"
+    val xMin = s"${t.a} * $c0 + ${t.c}"; val xMax = s"${t.a} * $c1 + ${t.c}"
+    val yMax = s"${t.e} * $r0 + ${t.f}"; val yMin = s"${t.e} * $r1 + ${t.f}"
+    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax))
+      .map { case (x, y) => inverseSql(grid)(x, y) }
+    (s"LEAST(${corners.map(_._1).mkString(", ")})",
+     s"GREATEST(${corners.map(_._1).mkString(", ")})",
+     s"LEAST(${corners.map(_._2).mkString(", ")})",
+     s"GREATEST(${corners.map(_._2).mkString(", ")})")
+  }
+
+  /** DuckDB (lon, lat) of the centre of tile `tid`: the tile side of every
+    * spatial-join mirror, over the ids of [[tileIdsSql]]. */
+  private def tileCentreSql(grid: GridRef): (String, String) = {
+    val t = grid.transform
+    val tilePx = grid.width / TileGridN
+    val pr = s"(CAST(tid // $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
+    val pc = s"(CAST(tid % $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
+    inverseSql(grid)(s"(${t.a} * $pc + ${t.c})", s"(${t.e} * $pr + ${t.f})")
+  }
+  private def tileIdsSql: String =
+    s"SELECT CAST(i AS BIGINT) AS tid FROM generate_series(0, ${TileGridN * TileGridN - 1}) t(i)"
+
   /** Sliver-free S2 cover via exact st-rect enumeration — the production
     * replacement for the 81-point lattice of [[geomCellCoverS2]].
     *
@@ -258,26 +300,7 @@ object DocOps {
 
   def geomCellCoverS2Sql(table: String, grid: GridRef, level: Int,
                          samples: Int = 9): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    def inv(xE: String, yE: String): (String, String) = {
-      val lat = s"(($yE) / $r) / ${WarpOps.D2R}"
-      val lon = s"(($xE) / ($r * COS(($yE) / $r))) / ${WarpOps.D2R} + $lon0"
-      (lon, lat)
-    }
-    val c0 = s"CAST((doc_id * 7) % 180 AS DOUBLE)"
-    val r0 = s"CAST((doc_id * 13) % 180 AS DOUBLE)"
-    val c1 = s"($c0 + 12)"; val r1 = s"($r0 + 12)"
-    val xMin = s"${t.a} * $c0 + ${t.c}"; val xMax = s"${t.a} * $c1 + ${t.c}"
-    val yMax = s"${t.e} * $r0 + ${t.f}"; val yMin = s"${t.e} * $r1 + ${t.f}"
-    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax)).map((inv _).tupled)
-    val lonMin = s"LEAST(${corners.map(_._1).mkString(", ")})"
-    val lonMax = s"GREATEST(${corners.map(_._1).mkString(", ")})"
-    val latMin = s"LEAST(${corners.map(_._2).mkString(", ")})"
-    val latMax = s"GREATEST(${corners.map(_._2).mkString(", ")})"
+    val (lonMin, lonMax, latMin, latMax) = geomBboxSql(grid)
     val k = (samples - 1).toDouble
     val lattice =
       s"""SELECT doc_id,
@@ -293,83 +316,20 @@ object DocOps {
   }
 
   /** H3-style hex cell cover of each doc geometry bbox (the north_rule's
-    * "H3 (res 7-12) ... cell covers for every geometry"): candidate axial
-    * range from the bbox corners' float axial hull expanded by the EXACT
-    * fractional margin — the axial map is linear in lon/lat so the rect's
-    * axial image is exactly the corner hull, and an intersecting hexagon's
-    * centre sits within circumradius `size` of the rect, i.e. within
-    * |grad qf|*size = |grad rf|*size = (2/3)*size/size = 2/3 axial units
-    * of the hull. Candidates are therefore ceil(min − 0.67) ..
-    * floor(max + 0.67) per axis (0.67 = 2/3 plus fp slack, identical
-    * literal both engines); the range always contains an integer (width
-    * > 1.34). This replaces the earlier integer ±1 margin: for sub-hex
-    * rects the candidate set drops from ~4x4 to ~1-2x1-2 before the
-    * EXACT hexagon-vs-rectangle separating-axis test — 5 axes: world x/y
-    * plus the hexagon's three edge normals, all per-res literal constants.
-    * Map-only explode + codegen filter; each covering cell emitted exactly
-    * once, no sampling, no distinct. */
-  def geomCellCoverHex(docsSpans: DataFrame, grid: GridRef, res: Int): DataFrame = {
-    val bbox = geomBbox(docsSpans, grid)
-    val cornerCols = Seq(("lon_min", "lat_min"), ("lon_max", "lat_min"),
-                         ("lon_min", "lat_max"), ("lon_max", "lat_max"))
-    val qrs = cornerCols.map { case (lo, la) =>
-      Hex.axialFloatColumns(col(lo), col(la), res) }
-    val ranged = bbox.select(col("doc_id"),
-      ((col("lon_min") + col("lon_max")) / 2.0).as("rcx"),
-      ((col("lat_min") + col("lat_max")) / 2.0).as("rcy"),
-      ((col("lon_max") - col("lon_min")) / 2.0).as("hw"),
-      ((col("lat_max") - col("lat_min")) / 2.0).as("hh"),
-      ceil(least(qrs.map(_._1): _*) - 0.67d).cast("long").as("q0"),
-      floor(greatest(qrs.map(_._1): _*) + 0.67d).cast("long").as("q1"),
-      ceil(least(qrs.map(_._2): _*) - 0.67d).cast("long").as("r0"),
-      floor(greatest(qrs.map(_._2): _*) + 0.67d).cast("long").as("r1"))
-    val cand = ranged
-      .select(col("*"), explode(sequence(col("q0"), col("q1"))).as("hq"))
-      .select(col("*"), explode(sequence(col("r0"), col("r1"))).as("hr"))
-    val sz = Hex.size(res)
-    val co = Hex.cosT(res); val si = Hex.sinT(res)
-    val sq3 = math.sqrt(3.0)
-    val lx = lit(sz) * (lit(sq3) * col("hq") + lit(sq3 / 2.0) * col("hr"))
-    val ly = lit(sz) * (lit(1.5) * col("hr"))
-    val cx = lit(co) * lx - lit(si) * ly
-    val cy = lit(si) * lx + lit(co) * ly
-    val dx = cx - col("rcx"); val dy = cy - col("rcy")
-    val sepX = abs(dx) > lit(Hex.supportX(res)) + col("hw")
-    val sepY = abs(dy) > lit(Hex.supportY(res)) + col("hh")
-    val sepN = Hex.normalAngles(res).map { a =>
-      val ux = math.cos(a); val uy = math.sin(a)
-      abs(dx * ux + dy * uy) >
-        lit(Hex.apothem(res)) + col("hw") * math.abs(ux) + col("hh") * math.abs(uy)
-    }
-    cand.filter(!(sepX || sepY || sepN.reduce(_ || _)))
-      .select(col("doc_id"),
-        shiftleft(shiftleft(col("hq") + (1L << 28), 29)
-          .bitwiseOR(col("hr") + (1L << 28)), 5)
-          .bitwiseOR(lit(res.toLong)).as("cell_id"))
-  }
+    * "H3 (res 7-12) ... cell covers for every geometry"): ONE static-kernel
+    * call per doc ([[graft.functions.HexRectCover]]: the bbox corners'
+    * axial hull widened by 2/3 axial units, then the exact 5-axis
+    * hexagon-vs-rectangle separating-axis test per candidate) + one
+    * explode. Each covering cell is emitted exactly once: no sampling, no
+    * distinct, no shuffle. */
+  def geomCellCoverHex(docsSpans: DataFrame, grid: GridRef, res: Int): DataFrame =
+    geomBbox(docsSpans, grid).select(col("doc_id"),
+      explode(graft.functions.HexRectCover.column(
+        col("lon_min"), col("lat_min"), col("lon_max"), col("lat_max"), res)).as("cell_id"))
 
   /** DuckDB mirror of [[geomCellCoverHex]]. */
   def geomCellCoverHexSql(table: String, grid: GridRef, res: Int): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    def inv(xE: String, yE: String): (String, String) = {
-      val lat = s"(($yE) / $r) / ${WarpOps.D2R}"
-      val lon = s"(($xE) / ($r * COS(($yE) / $r))) / ${WarpOps.D2R} + $lon0"
-      (lon, lat)
-    }
-    val c0 = s"CAST((doc_id * 7) % 180 AS DOUBLE)"
-    val r0 = s"CAST((doc_id * 13) % 180 AS DOUBLE)"
-    val c1 = s"($c0 + 12)"; val r1 = s"($r0 + 12)"
-    val xMin = s"${t.a} * $c0 + ${t.c}"; val xMax = s"${t.a} * $c1 + ${t.c}"
-    val yMax = s"${t.e} * $r0 + ${t.f}"; val yMin = s"${t.e} * $r1 + ${t.f}"
-    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax)).map((inv _).tupled)
-    val lonMin = s"LEAST(${corners.map(_._1).mkString(", ")})"
-    val lonMax = s"GREATEST(${corners.map(_._1).mkString(", ")})"
-    val latMin = s"LEAST(${corners.map(_._2).mkString(", ")})"
-    val latMax = s"GREATEST(${corners.map(_._2).mkString(", ")})"
+    val (lonMin, lonMax, latMin, latMax) = geomBboxSql(grid)
     val sz = Hex.size(res)
     val co = Hex.cosT(res); val si = Hex.sinT(res)
     val sq3 = math.sqrt(3.0)
@@ -428,26 +388,7 @@ object DocOps {
     * branches. */
   def geomCellCoverS2RectSql(table: String, grid: GridRef, level: Int,
                              samples: Int = 9): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    def inv(xE: String, yE: String): (String, String) = {
-      val lat = s"(($yE) / $r) / ${WarpOps.D2R}"
-      val lon = s"(($xE) / ($r * COS(($yE) / $r))) / ${WarpOps.D2R} + $lon0"
-      (lon, lat)
-    }
-    val c0 = s"CAST((doc_id * 7) % 180 AS DOUBLE)"
-    val r0 = s"CAST((doc_id * 13) % 180 AS DOUBLE)"
-    val c1 = s"($c0 + 12)"; val r1 = s"($r0 + 12)"
-    val xMin = s"${t.a} * $c0 + ${t.c}"; val xMax = s"${t.a} * $c1 + ${t.c}"
-    val yMax = s"${t.e} * $r0 + ${t.f}"; val yMin = s"${t.e} * $r1 + ${t.f}"
-    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax)).map((inv _).tupled)
-    val lonMin = s"LEAST(${corners.map(_._1).mkString(", ")})"
-    val lonMax = s"GREATEST(${corners.map(_._1).mkString(", ")})"
-    val latMin = s"LEAST(${corners.map(_._2).mkString(", ")})"
-    val latMax = s"GREATEST(${corners.map(_._2).mkString(", ")})"
+    val (lonMin, lonMax, latMin, latMax) = geomBboxSql(grid)
     s2RectCoverSqlFromBbox(
       s"""SELECT doc_id, $lonMin AS lon_min, $lonMax AS lon_max,
          |       $latMin AS lat_min, $latMax AS lat_max FROM $table""".stripMargin,
@@ -582,26 +523,7 @@ object DocOps {
   }
 
   def geomCellCoverSql(table: String, grid: GridRef, level: Int): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    def inv(xE: String, yE: String): (String, String) = {
-      val lat = s"(($yE) / $r) / ${WarpOps.D2R}"
-      val lon = s"(($xE) / ($r * COS(($yE) / $r))) / ${WarpOps.D2R} + $lon0"
-      (lon, lat)
-    }
-    val c0 = s"CAST((doc_id * 7) % 180 AS DOUBLE)"
-    val r0 = s"CAST((doc_id * 13) % 180 AS DOUBLE)"
-    val c1 = s"($c0 + 12)"; val r1 = s"($r0 + 12)"
-    val xMin = s"${t.a} * $c0 + ${t.c}"; val xMax = s"${t.a} * $c1 + ${t.c}"
-    val yMax = s"${t.e} * $r0 + ${t.f}"; val yMin = s"${t.e} * $r1 + ${t.f}"
-    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax)).map((inv _).tupled)
-    val lonMin = s"LEAST(${corners.map(_._1).mkString(", ")})"
-    val lonMax = s"GREATEST(${corners.map(_._1).mkString(", ")})"
-    val latMin = s"LEAST(${corners.map(_._2).mkString(", ")})"
-    val latMax = s"GREATEST(${corners.map(_._2).mkString(", ")})"
+    val (lonMin, lonMax, latMin, latMax) = geomBboxSql(grid)
     val n = 1L << level
     def ixE(lonE: String) =
       s"LEAST(${n - 1}, GREATEST(0, CAST(FLOOR((($lonE) + 180.0)/360.0*$n) AS BIGINT)))"
@@ -625,18 +547,7 @@ object DocOps {
   /** SQL mirror of [[spatialTileAssignments]]: tile centre cells computed
     * with the same arithmetic, joined to the cover. */
   def spatialTileAssignmentsSql(table: String, grid: GridRef, level: Int): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    val tilePx = grid.width / TileGridN
-    val pr = s"(CAST(tid // $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val pc = s"(CAST(tid % $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val tx = s"(${t.a} * $pc + ${t.c})"
-    val ty = s"(${t.e} * $pr + ${t.f})"
-    val lat = s"(($ty) / $r) / ${graft.ops.WarpOps.D2R}"
-    val lon = s"(($tx) / ($r * COS(($ty) / $r))) / ${graft.ops.WarpOps.D2R} + $lon0"
+    val (lon, lat) = tileCentreSql(grid)
     s"""WITH cover AS (${geomCellCoverSql(table, grid, level)}),
        |tiles AS (
        |  SELECT tid AS tile_id, ${Cells.cellIdSql(lon, lat, level)} AS cell_id
@@ -647,21 +558,27 @@ object DocOps {
        |ORDER BY doc_id, tile_id""".stripMargin
   }
 
-  /** S2 variant of the spatial doc x tile join: the st-rect kernel cover
-    * joined to tile-centre S2 cells — same broadcast equi-join shape as the
-    * quadtree flagship, second DGGS family end-to-end. */
-  def spatialTileAssignmentsS2(docsSpans: DataFrame, grid: GridRef, level: Int): DataFrame = {
-    val spark = docsSpans.sparkSession
-    val cover = geomCellCoverS2Rect(docsSpans, grid, level)
+  /** (tile_id, prow, pcol) of the flagship tiles, and the lon/lat Columns
+    * of each tile's centre pixel: the tile side of every spatial doc x tile
+    * join. */
+  private def tileCentres(spark: SparkSession, grid: GridRef): (DataFrame, Column, Column) = {
     val tilePx = grid.width / TileGridN
     val tiles = spark.range(TileGridN.toLong * TileGridN)
       .select(col("id").as("tile_id"),
         (expr(s"id div $TileGridN") * tilePx + tilePx / 2.0).as("prow"),
         (col("id") % TileGridN * tilePx + tilePx / 2.0).as("pcol"))
     val t = grid.transform
-    val tx = lit(t.a) * col("pcol") + lit(t.c)
-    val ty = lit(t.e) * col("prow") + lit(t.f)
-    val (lon, lat) = WarpOps.inverseColumns(grid.crs, tx, ty)
+    val (lon, lat) = WarpOps.inverseColumns(grid.crs,
+      lit(t.a) * col("pcol") + lit(t.c), lit(t.e) * col("prow") + lit(t.f))
+    (tiles, lon, lat)
+  }
+
+  /** S2 variant of the spatial doc x tile join: the st-rect kernel cover
+    * joined to tile-centre S2 cells — same broadcast equi-join shape as the
+    * quadtree flagship, second DGGS family end-to-end. */
+  def spatialTileAssignmentsS2(docsSpans: DataFrame, grid: GridRef, level: Int): DataFrame = {
+    val cover = geomCellCoverS2Rect(docsSpans, grid, level)
+    val (tiles, lon, lat) = tileCentres(docsSpans.sparkSession, grid)
     // staged cell id: the single-Column form's ~40k-node tree rode the
     // STREAM stage's task binary (9.9 MB) and its per-task deserialization
     // was the S2 flagship's GC bomb — see Cells.withS2CellId
@@ -676,42 +593,21 @@ object DocOps {
     * a broadcast-or-sort-merge spatial join" realized end-to-end on the
     * third DGGS family. Same plan shape as [[spatialTileAssignments]]. */
   def spatialTileAssignmentsHex(docsSpans: DataFrame, grid: GridRef, res: Int): DataFrame = {
-    val spark = docsSpans.sparkSession
     val cover = geomCellCoverHex(docsSpans, grid, res)
-    val tilePx = grid.width / TileGridN
-    val tiles = spark.range(TileGridN.toLong * TileGridN)
-      .select(col("id").as("tile_id"),
-        (expr(s"id div $TileGridN") * tilePx + tilePx / 2.0).as("prow"),
-        (col("id") % TileGridN * tilePx + tilePx / 2.0).as("pcol"))
-    val t = grid.transform
-    val tx = lit(t.a) * col("pcol") + lit(t.c)
-    val ty = lit(t.e) * col("prow") + lit(t.f)
-    val (lon, lat) = WarpOps.inverseColumns(grid.crs, tx, ty)
-    val tileCells = Hex.withCellId(tiles, lon, lat, res, "cell_id")
-      .select("tile_id", "cell_id")
+    val (tiles, lon, lat) = tileCentres(docsSpans.sparkSession, grid)
+    val tileCells = tiles.select(col("tile_id"),
+      graft.functions.HexCellId.column(lon, lat, res).as("cell_id"))
     cover.join(broadcast(tileCells), "cell_id")
       .select("doc_id", "tile_id", "cell_id")
   }
 
   /** DuckDB mirror of [[spatialTileAssignmentsHex]]. */
   def spatialTileAssignmentsHexSql(table: String, grid: GridRef, res: Int): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    val tilePx = grid.width / TileGridN
-    val pr = s"(CAST(tid // $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val pc = s"(CAST(tid % $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val tx = s"(${t.a} * $pc + ${t.c})"
-    val ty = s"(${t.e} * $pr + ${t.f})"
-    val lat = s"(($ty) / $r) / ${WarpOps.D2R}"
-    val lon = s"(($tx) / ($r * COS(($ty) / $r))) / ${WarpOps.D2R} + $lon0"
-    val tileSrc = s"SELECT CAST(i AS BIGINT) AS tid FROM generate_series(0, ${TileGridN * TileGridN - 1}) t(i)"
+    val (lon, lat) = tileCentreSql(grid)
     s"""WITH cover AS (${geomCellCoverHexSql(table, grid, res)}),
        |tiles AS (
        |  SELECT tid AS tile_id, cell_id FROM (
-       |    ${Hex.cellIdSql(tileSrc, lon, lat, res, Seq("tid"))}))
+       |    ${Hex.cellIdSql(tileIdsSql, lon, lat, res, Seq("tid"))}))
        |SELECT c.doc_id, t.tile_id, c.cell_id
        |FROM cover c JOIN tiles t ON c.cell_id = t.cell_id
        |ORDER BY 1, 2, 3""".stripMargin
@@ -720,23 +616,11 @@ object DocOps {
   /** DuckDB mirror of [[spatialTileAssignmentsS2]]: the st-rect cover CTE
     * joined to tile-centre S2 cells, identical CASE/arithmetic lockstep. */
   def spatialTileAssignmentsS2Sql(table: String, grid: GridRef, level: Int): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    val tilePx = grid.width / TileGridN
-    val pr = s"(CAST(tid // $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val pc = s"(CAST(tid % $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val tx = s"(${t.a} * $pc + ${t.c})"
-    val ty = s"(${t.e} * $pr + ${t.f})"
-    val lat = s"(($ty) / $r) / ${WarpOps.D2R}"
-    val lon = s"(($tx) / ($r * COS(($ty) / $r))) / ${WarpOps.D2R} + $lon0"
-    val tileSrc = s"SELECT CAST(i AS BIGINT) AS tid FROM generate_series(0, ${TileGridN * TileGridN - 1}) t(i)"
+    val (lon, lat) = tileCentreSql(grid)
     s"""WITH cover AS (${geomCellCoverS2RectSql(table, grid, level)}),
        |tiles AS (
        |  SELECT tid AS tile_id, cell_id FROM (
-       |    ${Cells.s2CellIdSql(tileSrc, lon, lat, level, Seq("tid"))}))
+       |    ${Cells.s2CellIdSql(tileIdsSql, lon, lat, level, Seq("tid"))}))
        |SELECT c.doc_id, t.tile_id, c.cell_id
        |FROM cover c JOIN tiles t ON c.cell_id = t.cell_id
        |ORDER BY 1, 2, 3""".stripMargin
@@ -747,17 +631,8 @@ object DocOps {
     * tile side is tiny metadata here; at corpus scale both sides are
     * partitioned by Hilbert ranges of cell_id and the join co-locates. */
   def spatialTileAssignments(docsSpans: DataFrame, grid: GridRef, level: Int): DataFrame = {
-    val spark = docsSpans.sparkSession
     val cover = geomCellCover(docsSpans, grid, level)
-    val tilePx = grid.width / TileGridN
-    val tiles = spark.range(TileGridN.toLong * TileGridN)
-      .select(col("id").as("tile_id"),
-        (expr(s"id div $TileGridN") * tilePx + tilePx / 2.0).as("prow"),
-        (col("id") % TileGridN * tilePx + tilePx / 2.0).as("pcol"))
-    val t = grid.transform
-    val tx = lit(t.a) * col("pcol") + lit(t.c)
-    val ty = lit(t.e) * col("prow") + lit(t.f)
-    val (lon, lat) = WarpOps.inverseColumns(grid.crs, tx, ty)
+    val (tiles, lon, lat) = tileCentres(docsSpans.sparkSession, grid)
     val tileCells = tiles.select(col("tile_id"),
       Cells.cellIdColumn(lon, lat, level).as("cell_id"))
     // (doc_id, tile_id, cell_id) is already unique: cover cells are unique

@@ -210,12 +210,10 @@ object KnnOps {
     import graft.core.Hex
     val res = 0 // scaling rides on cellSize; res-0 rotation is identity
     val bias = 1L << 28
-    // r6: staged withCellId instead of the single-Column hex id — the
-    // inline form re-inlines the qf/rf trees into every cube-round branch
-    // (the documented Hex.withCellId task-binary blowup); bit-identical ids
+    // one static Hex.cellId call per row (functions.HexCellId)
     def cell(df: DataFrame, x: Column, y: Column, out: String): DataFrame =
-      Hex.withCellId(df, x / cellSize * Hex.size(res), y / cellSize * Hex.size(res),
-        res, out)
+      df.withColumn(out, graft.functions.HexCellId.column(
+        x / cellSize * Hex.size(res), y / cellSize * Hex.size(res), res))
     val tb = cell(targets, col("tx"), col("ty"), "hb")
     val qc = cell(queries, col("qx"), col("qy"), "hc")
       // unpack axial (q, r) from the id with plain bit arithmetic

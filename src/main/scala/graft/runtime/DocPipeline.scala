@@ -39,8 +39,8 @@ object DocPipeline {
   }
 
   /** The SAME flagship over the other two DGGS families: the cover stage
-    * swaps (S2 st-rect kernel at `level`; H3-style hex SAT at `res`), the
-    * join/aggregate shape is identical — end-to-end evidence that every
+    * swaps (S2 st-rect kernel at `level`; hex rect-cover kernel at `res`),
+    * the join/aggregate shape is identical — end-to-end evidence that every
     * cell family drives the spatial join at flagship scale.
     *
     * Level 10 is the granularity match for the quadtree flagship's level 12:
@@ -49,8 +49,8 @@ object DocPipeline {
     * 0.088°). Round 3 ran this leg at level 7 — cells ~8x coarser than the
     * quadtree leg's, collapsing every tile centre into a couple of cells and
     * inflating the equi-join output to 38.7 assignment rows/doc vs the
-    * quadtree's ~3 (77M vs 6M rows at 2M docs; S2Probe measurement). That
-    * join fan-out, not the cover kernel, was the bulk of the 397s/22.4s
+    * quadtree's ~3 (77M vs 6M rows at 2M docs, measured). That join
+    * fan-out, not the cover kernel, was the bulk of the 397s/22.4s
     * BENCH_r03 S2 leg. At level 10 the three legs do equivalent semantic
     * work: 2.69 cover cells/doc and 4.0 assignment rows/doc. */
   def runS2(spark: SparkSession, nDocs: Long, level: Int = 10,
@@ -68,10 +68,11 @@ object DocPipeline {
     * 360/2^12 = 0.088°. Round 4 ran this leg at res 5 (diameter 0.20°,
     * ~2.6x coarser): the 64 flagship tile centres collapsed into 13 hex
     * cells and the equi-join emitted 11.2 assignment rows/doc vs the
-    * quadtree's ~4 (22.4M vs 8M rows at 2M docs; HexProbe measurement) —
-    * join fan-out, not the SAT cover, was the hex leg's 2.5x gap. At res 6
-    * the three legs do equivalent semantic work: 3.15 cover cells/doc,
-    * 3.76 assignment rows/doc, 48 distinct tile cells. */
+    * quadtree's ~4 (22.4M vs 8M rows at 2M docs, measured) — join fan-out,
+    * not the cover, was the hex leg's 2.5x gap. At res 6 the three legs do
+    * equivalent semantic work: 3.15 cover cells/doc, 3.76 assignment
+    * rows/doc, 48 distinct tile cells. Both hex sides are one static
+    * kernel call per row: HexRectCover per doc, HexCellId per tile. */
   def runHex(spark: SparkSession, nDocs: Long, res: Int = 6,
              parallelism: Int = 0): (Long, Long) = {
     val spans = DocOps.interleave(syntheticDocs(spark, nDocs, parallelism))

@@ -222,8 +222,8 @@ object CurationOps {
        |    len(regexp_extract_all(text, '${TextOps.BpeTokenRegex}')) AS n_tokens
        |  FROM $table),
        |w AS (SELECT doc_id, n_tokens,
-       |    sum(n_tokens) OVER (ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+       |    CAST(sum(n_tokens) OVER (ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
        |  FROM t WHERE n_tokens > 0)
        |SELECT doc_id, n_tokens, cum - n_tokens AS tok_start,
        |  (cum - n_tokens) // $budget AS chunk_first,

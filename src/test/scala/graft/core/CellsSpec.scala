@@ -101,9 +101,11 @@ class CellsSpec extends SparkTestBase {
   }
 
   test("staged withS2CellId / Hex.withCellId are bit-identical to the Column forms") {
-    // the staged forms exist because the single-Column trees explode to
+    // the staged S2 form exists because the single-Column tree explodes to
     // ~40k nodes (10 MB task binaries re-deserialized per task — the
-    // round-4 S2 flagship GC stall); identical per-row results required
+    // round-4 S2 flagship GC stall); identical per-row results required.
+    // The hex id is a single kernel call (functions.HexCellId), checked in
+    // both codegen and interpreted mode.
     import spark.implicits._
     val sample = (0 until 2000).map { i =>
       (i.toLong, -180.0 + (i * 7919 % 3600) / 10.0, -89.0 + (i * 104729 % 1780) / 10.0)
@@ -117,15 +119,16 @@ class CellsSpec extends SparkTestBase {
           s"s2 point $id ($lon,$lat) level $level")
       }
     }
-    for (res <- Seq(5, 8)) {
-      val colForm = df.select(col("id"),
-        Hex.cellIdColumn(col("lon"), col("lat"), res).as("cell"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val staged = Hex.withCellId(df, col("lon"), col("lat"), res, "cell")
-        .select("id", "cell").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(staged == colForm, s"hex res $res")
-      sample.foreach { case (id, lon, lat) =>
-        assert(staged(id) == Hex.cellId(lon, lat, res), s"hex point $id res $res")
+    val rdd = spark.sparkContext.parallelize(sample, 4).toDF("id", "lon", "lat")
+    inBothCodegenModes { mode =>
+      for (res <- Seq(5, 8)) {
+        val kernel = rdd.select(col("id"),
+          graft.functions.HexCellId.column(col("lon"), col("lat"), res).as("cell"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(kernel.size == sample.size, s"$mode hex res $res")
+        sample.foreach { case (id, lon, lat) =>
+          assert(kernel(id) == Hex.cellId(lon, lat, res), s"$mode hex point $id res $res")
+        }
       }
     }
   }

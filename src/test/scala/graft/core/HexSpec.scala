@@ -1,6 +1,7 @@
 package graft.core
 
 import graft.SparkTestBase
+import graft.functions.HexCellId
 import org.apache.spark.sql.functions._
 
 /** H3-style aperture-7 hex index: scalar/Column lockstep, id packing,
@@ -18,13 +19,18 @@ class HexSpec extends SparkTestBase {
     import spark.implicits._
     val pts = (for (i <- -20 to 20; j <- -10 to 10)
       yield (i * 7.3 + 0.01 * j, j * 6.1 + 0.007 * i)).toSeq
-    val df = pts.toDF("lon", "lat")
-    for (res <- Seq(0, 4, 8, 12)) {
-      val got = df.select(col("lon"), col("lat"),
-        Hex.cellIdColumn(col("lon"), col("lat"), res).as("c")).collect()
-      got.foreach { r =>
-        val exp = Hex.cellId(r.getDouble(0), r.getDouble(1), res)
-        assert(r.getLong(2) == exp, s"(${r.getDouble(0)},${r.getDouble(1)}) res $res")
+    // an RDD-backed frame: a local Seq would be folded by the optimizer
+    // and never reach the executed projection
+    val df = spark.sparkContext.parallelize(pts, 2).toDF("lon", "lat")
+    inBothCodegenModes { mode =>
+      for (res <- Seq(0, 4, 8, 12)) {
+        val got = df.select(col("lon"), col("lat"),
+          HexCellId.column(col("lon"), col("lat"), res).as("c")).collect()
+        assert(got.length == pts.size)
+        got.foreach { r =>
+          val exp = Hex.cellId(r.getDouble(0), r.getDouble(1), res)
+          assert(r.getLong(2) == exp, s"$mode: (${r.getDouble(0)},${r.getDouble(1)}) res $res")
+        }
       }
     }
   }
